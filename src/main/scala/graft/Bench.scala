@@ -23,9 +23,12 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Warm codegen + JIT per query against the smallest SF (first
     // execution of a query costs 2-10x in Janino compilation and
-    // interpreter-mode generated code; the compiled classes are shared
-    // with the timed run). Untimed by design — standard JVM bench
-    // hygiene, not part of the measured work.
+    // interpreter-mode generated code). The compiled classes are
+    // shared with the timed run only while the catalog's working set
+    // of generated classes is no larger than Spark's class cache
+    // (GraftSession.CodegenCacheEntries); past that the LRU evicts
+    // them before their query runs again. Untimed by design —
+    // standard JVM bench hygiene, not part of the measured work.
     val warmDir = {
       val p = java.nio.file.Paths.get(sfDir)
       val sibling = Option(p.getParent)

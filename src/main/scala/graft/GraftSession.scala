@@ -24,8 +24,23 @@ import org.apache.spark.sql.SparkSession
   *  - ANSI off: the engine's pandas-coerce semantics (Spark 4 flips
   *    the default).
   *  - UTC: the oracle compares timestamps in one zone.
+  *  - Codegen class cache sized to the catalog's working set
+  *    (`CodegenCacheEntries`).
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One sf0.01
+    * pass of the full catalog generates ~2,700 distinct classes and a
+    * second pass ~150 more; an LRU smaller than that loop misses
+    * almost every time (~4,400 Janino compiles in the first pass,
+    * ~4,100 in the second). 4096 holds the whole working set with
+    * headroom, so a repeated execution reuses its compiled classes.
+    * Static conf: Spark reads it once per JVM, when `CodeGenerator` is
+    * first used, so every session of a JVM (specs included) takes it
+    * from here.
+    */
+  val CodegenCacheEntries = 4096
 
   /** Common builder: `master` e.g. "local[32]", `shufflePartitions`
     * normally = the core count (AQE re-sizes by bytes from there).
@@ -46,6 +61,8 @@ object GraftSession {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
 
   /** The driver-contract builder: core count from $SPARK_GRAFT_CPUS

@@ -11,6 +11,9 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // static conf, read once per JVM: specs run with the engine's size
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheEntries.toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
