@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.PortableRound.pround
 import graft.operators.FuzzyJoin
 import graft.text.TextAnalysis
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, Lsh}
 import graft.sim.{Pq, Similarity}
 import graft.sketch.Sketches
 
@@ -239,19 +239,19 @@ object QueriesScale {
       .cast("long")
 
   /** Banded-LSH pair join + exact nibble-xor hamming rescore over an
-    * (asset_id, dhash) frame — the shared back half of q117 (PPM) and
-    * q133 (PNG); only 24-byte hash rows ever shuffle.
+    * (asset_id, `hashCol`) frame of 16-hex-char perceptual hashes —
+    * the shared back half of q117 (PPM), q133 (PNG), q145 (JPEG) and
+    * q118 (audio, `afp`); only 24-byte hash rows ever shuffle.
     */
-  private def imagePhashPairs(hashed: DataFrame): DataFrame = {
+  private def imagePhashPairs(hashed: DataFrame,
+                              hashCol: String = "dhash"): DataFrame = {
     val banded = hashed.repartition(col("asset_id"))
-      .select(col("asset_id"), col("dhash"),
-        posexplode(array((0 until 4).map(b =>
-          col("dhash").substr(b * 4 + 1, 4)): _*))
-          .as(Seq("band_idx", "band_val")))
+      .select(col("asset_id"), col(hashCol),
+        Lsh.substrBands(col(hashCol), 4, 4))
     val a = banded.select(col("asset_id").as("id_a"),
-      col("dhash").as("h_a"), col("band_idx"), col("band_val"))
+      col(hashCol).as("h_a"), col("band_idx"), col("band_val"))
     val bb = banded.select(col("asset_id").as("id_b"),
-      col("dhash").as("h_b"), col("band_idx"), col("band_val"))
+      col(hashCol).as("h_b"), col("band_idx"), col("band_val"))
     a.join(bb, Seq("band_idx", "band_val"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -626,7 +626,7 @@ object QueriesScale {
         .select(col("doc_id"),
           array_join(col("sig"), "|").as("sig_cat"),
           array_join(transform(sequence(lit(0), lit(3)),
-            b => md5(concat_ws("|", slice(col("sig"), b * 4 + 1, lit(4))))),
+            b => Lsh.minhashBandHash(col("sig"), b, 4)),
             "|").as("band_hashes"))
     },
 
@@ -3671,31 +3671,16 @@ object QueriesScale {
 
     // Audio perceptual near-dup: Haitsma–Kalker energy-delta
     // fingerprint over REAL decoded PCM16 (RIFF/WAVE round-trip),
-    // then the same banded-LSH pair join + exact hamming rescore as
-    // q117's image dHash — one fingerprint exchange, payload bytes
-    // never shuffle. The oracle recomputes the fingerprint from the
+    // then q117's banded-LSH pair join + exact hamming rescore
+    // (imagePhashPairs over `afp`) — one fingerprint exchange,
+    // payload bytes never shuffle. The oracle recomputes the fingerprint from the
     // waveform formula, so a hash match proves the PCM encode →
     // chunk-walk decode → frame-energy path bit-for-bit.
     "q118_audio_fingerprint" -> q { (spark, dir) =>
       import graft.multimodal.Multimodal
       val v118 = vecs(spark, dir)
-      val fp = Multimodal.audioFingerprint(
-        Multimodal.wavAssetsNearDup(v118, phashGroups(v118)))
-      val banded = fp.repartition(col("asset_id"))
-        .select(col("asset_id"), col("afp"),
-          posexplode(array((0 until 4).map(b =>
-            col("afp").substr(b * 4 + 1, 4)): _*))
-            .as(Seq("band_idx", "band_val")))
-      val a = banded.select(col("asset_id").as("id_a"),
-        col("afp").as("h_a"), col("band_idx"), col("band_val"))
-      val bb = banded.select(col("asset_id").as("id_b"),
-        col("afp").as("h_b"), col("band_idx"), col("band_val"))
-      a.join(bb, Seq("band_idx", "band_val"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          Dedup.simhashHamming(col("h_a"), col("h_b")).as("hamming"))
-        .filter(col("hamming") <= 10)
-        .distinct()
+      imagePhashPairs(Multimodal.audioFingerprint(
+        Multimodal.wavAssetsNearDup(v118, phashGroups(v118))), "afp")
     },
 
     // Model-based quality filter: a logistic classifier with PINNED

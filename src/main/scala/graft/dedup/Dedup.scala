@@ -79,40 +79,21 @@ object Dedup {
                          threshold: Double = 0.5): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
-    def sigs(df: DataFrame): DataFrame = df
-      .select(col(idCol), col(textCol))
-      .repartition(col(idCol))
-      .withColumn("sig", minhashSignature(col(textCol), k, shingleSize))
-      .withColumn("sig_fp", md5(concat_ws("|", col("sig"))))
-      .select(col(idCol), col("sig"), col("sig_fp"))
-      .repartition(col("sig_fp"))
-    def banded(groups: DataFrame): DataFrame = groups
-      .withColumn("band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band_idx"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r))))
-              .as("band_hash")))))
-      .withColumn("band_idx", col("band.band_idx"))
-      .withColumn("band_hash", col("band.band_hash"))
-      .drop("band")
-    val ns = sigs(newDocs)
+    val ns = sigFrame(newDocs, idCol, textCol, k, shingleSize)
     // fp-only band join + candidate-cardinality sig fetch + mandatory
-    // shuffle hint (the minhashPairs r12 discipline): the band
-    // exchange carries fingerprints, never the 16-hash arrays, and
-    // the collapse aggregates' tiny size estimates can never
-    // broadcast the corpus-proportional history side
+    // shuffle hint (the [[Lsh]] discipline): the band exchange carries
+    // fingerprints, never the 16-hash arrays, and the collapse
+    // aggregates' tiny size estimates can never broadcast the
+    // corpus-proportional history side
     val nGroups = ns.groupBy(col("sig_fp"))
       .agg(first(col("sig")).as("sig"))
-    val hGroups = sigs(history).groupBy(col("sig_fp"))
+    val hGroups = sigFrame(history, idCol, textCol, k, shingleSize)
+      .groupBy(col("sig_fp"))
       .agg(min(col(idCol)).as("hist_rep"), first(col("sig")).as("sig"))
-    val nBand = banded(nGroups)
-      .select(col("sig_fp").as("fp_n"),
-        col("band_idx"), col("band_hash"))
-    val hBand = banded(hGroups)
-      .select(col("sig_fp").as("fp_h"),
-        col("band_idx"), col("band_hash"))
-    val candFp = nBand.hint("shuffle_hash")
-      .join(hBand.hint("shuffle_hash"), Seq("band_idx", "band_hash"))
+    val candFp = Lsh.bandProbe(
+        minhashBanded(nGroups, bands, r, col("sig_fp").as("fp_n")),
+        minhashBanded(hGroups, bands, r, col("sig_fp").as("fp_h")),
+        "band_hash")
       .select(col("fp_n"), col("fp_h"))
       .distinct()
     val cand = candFp
@@ -121,8 +102,7 @@ object Dedup {
       .join(hGroups.select(col("sig_fp").as("fp_h"),
         col("hist_rep"), col("sig").as("__sh")), Seq("fp_h"))
       .select(col("fp_n"), col("hist_rep"),
-        (size(filter(zip_with(col("__sn"), col("__sh"),
-          (x, y) => x === y), p => p)).cast("double") / k)
+        Lsh.minhashAgreement(col("__sn"), col("__sh"), k)
           .as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
     val best = cand.groupBy(col("fp_n"))
@@ -164,39 +144,22 @@ object Dedup {
     // sides of the downstream self-join, recomputing it per reference.
     // Behind the exchange it is computed exactly once per doc, and AQE
     // reuses the exchange across the self-join's two branches.
-    docs
+    val sigs = docs
       .select(col(idCol), col(textCol))
       .repartition(col(idCol))
       .withColumn("sig", minhashSignature(col(textCol), k, shingleSize))
       .repartition(col(idCol))
-      .withColumn("band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band_idx"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r))))
-              .as("band_hash")))))
-      .select(col(idCol), col("sig"),
-        col("band.band_idx"), col("band.band_hash"))
+    minhashBanded(sigs, bands, r, col(idCol), col("sig"))
   }
 
-  /** MinHash-LSH candidate pairs with estimated Jaccard = fraction of
-    * equal signature components. The join key is (band_idx, band_hash)
-    * — at scale this shuffles each doc `bands` times instead of
-    * comparing all pairs.
-    *
-    * Identical-document hardening (r4 verdict item 2): docs with
-    * IDENTICAL signatures collide in every band, so a cluster of m
-    * exact dups would put bands·m² rows through the band join and the
-    * distinct exchange (a real 100 TB hazard — crawl corpora hold
-    * million-copy boilerplate clusters). Signatures are therefore
-    * collapsed to ONE representative per distinct signature before the
-    * band self-join; member pairs re-expand afterward at output
-    * cardinality. Semantics are unchanged: est_jaccard is a function
-    * of the two signatures only, so every member of a signature group
-    * scores identically to its representative, and within-group pairs
-    * are exactly est_jaccard = 1.0. Worst case drops from
-    * quadratic-in-cluster band work to linear (plus the inherently
-    * output-sized pair list).
+  /** (`cols`…, band_idx, band_hash): one row per MinHash band of each
+    * row's `sig` ([[Lsh.minhashBands]]).
     */
+  private def minhashBanded(sigs: DataFrame, bands: Int, r: Int,
+                            cols: Column*): DataFrame =
+    sigs.withColumn("band", Lsh.minhashBands(col("sig"), bands, r))
+      .select(cols ++ Seq(col("band.band_idx"), col("band.band_hash")): _*)
+
   private val sigCache = new graft.model.BoundedCache[DataFrame](
     graft.model.NgramLm.MaxMemoEntries,
     graft.model.Checkpoints.release)
@@ -280,13 +243,31 @@ object Dedup {
       .select(col(idCol), col("sig"), col("sig_fp"))
       .repartition(col("sig_fp"))
 
+  /** MinHash-LSH candidate pairs with estimated Jaccard = fraction of
+    * equal signature components. The join key is (band_idx, band_hash)
+    * — at scale this shuffles each doc `bands` times instead of
+    * comparing all pairs.
+    *
+    * Identical-document hardening (r4 verdict item 2): docs with
+    * IDENTICAL signatures collide in every band, so a cluster of m
+    * exact dups would put bands·m² rows through the band join and the
+    * distinct exchange (a real 100 TB hazard — crawl corpora hold
+    * million-copy boilerplate clusters). Signatures are therefore
+    * collapsed to ONE representative per distinct signature before the
+    * band self-join; member pairs re-expand afterward at output
+    * cardinality. Semantics are unchanged: est_jaccard is a function
+    * of the two signatures only, so every member of a signature group
+    * scores identically to its representative, and within-group pairs
+    * are exactly est_jaccard = 1.0. Worst case drops from
+    * quadratic-in-cluster band work to linear (plus the inherently
+    * output-sized pair list).
+    */
   def minhashPairs(docs: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text", k: Int = 16,
                    bands: Int = 4, shingleSize: Int = 3,
                    threshold: Double = 0.5,
                    serveSigs: Boolean = false): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
-    val r = k / bands
     // First repartition: parallelize signature hashing (input may
     // arrive as few splits). Second: a materialization barrier keyed
     // on sig_fp — the grouped aggregate below then needs no further
@@ -303,51 +284,7 @@ object Dedup {
     // first(sig) is deterministic in value
     val groups = sigs.groupBy(col("sig_fp"))
       .agg(min(col(idCol)).as("rep_id"), first(col("sig")).as("sig"))
-    // the band join carries (sig_fp, rep_id, band) ONLY — never the
-    // 16-hash signature array (r12: shuffling sig arrays bands× per
-    // group measured 17× the whole-query wall at sf1; and without
-    // that weight the join must still be HINTED to shuffle, because
-    // both sides descend from the collapse AGGREGATE whose size
-    // estimate would otherwise broadcast a corpus-proportional side
-    // — an OOM at 100 TB). Signatures join back below at candidate
-    // cardinality to score est_jaccard.
-    // ONE explicit band exchange shared by BOTH self-join sides (r14,
-    // guide §2.4 — see simhashRepPairsFromSigs)
-    val banded = groups
-      .withColumn("band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band_idx"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r))))
-              .as("band_hash")))))
-      .select(col("sig_fp"), col("rep_id"),
-        col("band.band_idx"), col("band.band_hash"))
-      .repartition(col("band_idx"), col("band_hash"))
-    val a = banded.select(col("sig_fp").as("fp_a"),
-      col("rep_id").as("rid_a"), col("band_idx"), col("band_hash"))
-    val b = banded.select(col("sig_fp").as("fp_b"),
-      col("rep_id").as("rid_b"), col("band_idx"), col("band_hash"))
-    // rid_a < rid_b: each unordered pair of DISTINCT signature groups
-    // once (rep ids are unique per group); same-group collisions are
-    // excluded here and handled exactly below. distinct() BEFORE the
-    // signature fetch: multi-band collisions dedupe at 32-char
-    // fingerprint-pair weight, so the sig arrays materialize once per
-    // candidate pair, not once per shared band.
-    val candFp = a.hint("shuffle_hash")
-      .join(b.hint("shuffle_hash"), Seq("band_idx", "band_hash"))
-      .filter(col("rid_a") < col("rid_b"))
-      .select(col("fp_a"), col("fp_b"))
-      .distinct()
-    val sigOf = groups.select(col("sig_fp"), col("sig"))
-    val repPairs = candFp
-      .join(sigOf.select(col("sig_fp").as("fp_a"),
-        col("sig").as("__sa")), Seq("fp_a"))
-      .join(sigOf.select(col("sig_fp").as("fp_b"),
-        col("sig").as("__sb")), Seq("fp_b"))
-      .select(col("fp_a"), col("fp_b"),
-        (size(filter(zip_with(col("__sa"), col("__sb"),
-          (x, y) => x === y), p => p)).cast("double") / k)
-          .as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    val repPairs = minhashRepPairs(groups, k, bands, threshold)
     // cross-group expansion: every (member of A, member of B) combo,
     // oriented smaller-id-first — pure fan-out joins, output-sized
     val cross = repPairs
@@ -367,6 +304,42 @@ object Dedup {
       .select(col("id_a"), col("id_b"), lit(1.0).as("est_jaccard"))
       .filter(lit(1.0) >= threshold)
     cross.union(within)
+  }
+
+  /** Shared collapse stage of [[minhashPairs]]/[[minhashEdges]]
+    * ([[simhashRepPairsFromSigs]]' MinHash twin): one row
+    * (fp_a, fp_b, __ra, __rb, est_jaccard) per unordered pair of
+    * DISTINCT signature groups that share a band and reach
+    * `threshold`. `groups` is the per-signature collapse
+    * (sig_fp, rep_id, sig, …). The band join carries
+    * (sig_fp, rep_id, band) ONLY — never the k-hash signature array
+    * (r12: shuffling sig arrays bands× per group measured 17× the
+    * whole-query wall at sf1); signatures and rep ids join back at
+    * candidate cardinality.
+    */
+  private def minhashRepPairs(groups: DataFrame, k: Int, bands: Int,
+                              threshold: Double): DataFrame = {
+    val banded = minhashBanded(groups, bands, k / bands,
+      col("sig_fp"), col("rep_id"))
+    // same-group collisions are excluded by the rep orientation and
+    // handled exactly by the callers. distinct() BEFORE the signature
+    // fetch: multi-band collisions dedupe at 32-char fingerprint-pair
+    // weight, so the sig arrays materialize once per candidate pair,
+    // not once per shared band.
+    val candFp = Lsh.bandSelfJoin(banded, "band_hash",
+        Seq("sig_fp" -> "fp"), "rep_id" -> "rid")
+      .select(col("fp_a"), col("fp_b"))
+      .distinct()
+    val repOf = groups.select(col("sig_fp"), col("rep_id"), col("sig"))
+    candFp
+      .join(repOf.select(col("sig_fp").as("fp_a"),
+        col("rep_id").as("__ra"), col("sig").as("__sa")), Seq("fp_a"))
+      .join(repOf.select(col("sig_fp").as("fp_b"),
+        col("rep_id").as("__rb"), col("sig").as("__sb")), Seq("fp_b"))
+      .select(col("fp_a"), col("fp_b"), col("__ra"), col("__rb"),
+        Lsh.minhashAgreement(col("__sa"), col("__sb"), k)
+          .as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
   }
 
   /** Connectivity-preserving MinHash edge set for connected-components
@@ -396,49 +369,14 @@ object Dedup {
   private def minhashEdgesFromSigs(sigs: DataFrame, idCol: String,
                                    k: Int, bands: Int,
                                    threshold: Double): DataFrame = {
-    val r = k / bands
     val members = sigs.select(col("sig_fp"), col(idCol))
     val groups = sigs.groupBy(col("sig_fp"))
       .agg(min(col(idCol)).as("rep_id"), first(col("sig")).as("sig"),
         count(lit(1)).as("__m"))
-    // fp-only band join + candidate-cardinality sig fetch + mandatory
-    // shuffle hint — the [[minhashPairs]] r12 discipline verbatim
-    // ONE explicit band exchange shared by BOTH self-join sides (r14,
-    // guide §2.4 — see simhashRepPairsFromSigs)
-    val banded = groups
-      .withColumn("band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band_idx"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r))))
-              .as("band_hash")))))
-      .select(col("sig_fp"), col("rep_id"),
-        col("band.band_idx"), col("band.band_hash"))
-      .repartition(col("band_idx"), col("band_hash"))
-    val a = banded.select(col("sig_fp").as("fp_a"),
-      col("rep_id").as("rid_a"), col("band_idx"), col("band_hash"))
-    val b = banded.select(col("sig_fp").as("fp_b"),
-      col("rep_id").as("rid_b"), col("band_idx"), col("band_hash"))
-    val candFp = a.hint("shuffle_hash")
-      .join(b.hint("shuffle_hash"), Seq("band_idx", "band_hash"))
-      .filter(col("rid_a") < col("rid_b"))
-      .select(col("fp_a"), col("fp_b"))
-      .distinct()
-    val repOf = groups.select(col("sig_fp"), col("rep_id"), col("sig"))
-    val repEdges = candFp
-      .join(repOf.select(col("sig_fp").as("fp_a"),
-        col("rep_id").as("__ra"), col("sig").as("__sa")), Seq("fp_a"))
-      .join(repOf.select(col("sig_fp").as("fp_b"),
-        col("rep_id").as("__rb"), col("sig").as("__sb")), Seq("fp_b"))
-      .filter((size(filter(zip_with(col("__sa"), col("__sb"),
-        (x, y) => x === y), p => p)).cast("double") / k) >= threshold)
+    val repEdges = minhashRepPairs(groups, k, bands, threshold)
       .select(least(col("__ra"), col("__rb")).as("id_a"),
         greatest(col("__ra"), col("__rb")).as("id_b"))
-    val starEdges = members
-      .join(groups.filter(col("__m") > 1)
-        .select(col("sig_fp"), col("rep_id")), Seq("sig_fp"))
-      .filter(col(idCol) =!= col("rep_id"))
-      .select(col("rep_id").as("id_a"), col(idCol).as("id_b"))
-    repEdges.union(starEdges)
+    repEdges.union(Lsh.starEdges(members, groups, "sig_fp", idCol))
   }
 
   /** BATCH-PROPORTIONAL MinHash edge discovery (r13 —
@@ -474,18 +412,10 @@ object Dedup {
     val hGroups = served.select(col(idCol), col("sig"), col("sig_fp"))
       .groupBy(col("sig_fp"))
       .agg(min(col(idCol)).as("rep_h"), first(col("sig")).as("sig"))
-    def bandsOf(g: DataFrame, fpAs: String): DataFrame = g
-      .withColumn("band",
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band_idx"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r))))
-              .as("band_hash")))))
-      .select(col("sig_fp").as(fpAs),
-        col("band.band_idx").as("band_idx"),
-        col("band.band_hash").as("band_hash"))
-    val candFp = bandsOf(bGroups, "fp_b").hint("shuffle_hash")
-      .join(bandsOf(hGroups, "fp_h").hint("shuffle_hash"),
-        Seq("band_idx", "band_hash"))
+    val candFp = Lsh.bandProbe(
+        minhashBanded(bGroups, bands, r, col("sig_fp").as("fp_b")),
+        minhashBanded(hGroups, bands, r, col("sig_fp").as("fp_h")),
+        "band_hash")
       .select(col("fp_b"), col("fp_h"))
       .distinct()
     val crossEdges = candFp
@@ -493,8 +423,8 @@ object Dedup {
         col("sig").as("__sb")), Seq("fp_b"))
       .join(hGroups.select(col("sig_fp").as("fp_h"), col("rep_h"),
         col("sig").as("__sh")), Seq("fp_h"))
-      .filter((size(filter(zip_with(col("__sb"), col("__sh"),
-        (x, y) => x === y), p => p)).cast("double") / k) >= threshold)
+      .filter(Lsh.minhashAgreement(col("__sb"), col("__sh"), k)
+        >= threshold)
       .select(least(col("rep_b"), col("rep_h")).as("id_a"),
         greatest(col("rep_b"), col("rep_h")).as("id_b"))
     crossEdges.union(
@@ -671,35 +601,15 @@ object Dedup {
     // one row per DISTINCT signature; rep ids are unique per group
     val groups = sigs.groupBy(col("sh"))
       .agg(min(col(idCol)).as("rep_id"))
-    // ONE explicit band exchange shared by BOTH self-join sides (r14,
-    // guide §2.4): planner-inserted exchanges under the two aliased
-    // projections don't canonicalize equal, so the same banded frame
-    // shuffled twice; a repartition barrier here satisfies both
-    // sides' distribution and ReuseExchange/AQE runs it once.
-    val banded = groups
-      .select(col("sh"), col("rep_id"),
-        posexplode(array((0 until 4).map(b =>
-          col("sh").substr(b * 4 + 1, 4)): _*))
-          .as(Seq("band_idx", "band_val")))
-      .repartition(col("band_idx"), col("band_val"))
-    val a = banded.select(col("sh").as("sh_a"),
-      col("rep_id").as("rid_a"), col("band_idx"), col("band_val"))
-    val b = banded.select(col("sh").as("sh_b"),
-      col("rep_id").as("rid_b"), col("band_idx"), col("band_val"))
     // rid_a < rid_b: each unordered pair of DISTINCT signatures once;
-    // same-signature collisions are excluded here and handled
-    // arithmetically by the callers. shuffle_hash hint: the banded
-    // sides descend from an AGGREGATE (the signature collapse), whose
-    // size estimate is tiny — without the hint Spark broadcasts a
-    // corpus-proportional side (2M rows at sf1: a 6× wall regression
-    // measured by DevSimhashDiag, and an OOM at 100 TB). The band
-    // equi-join must stay a shuffle join at any corpus size.
-    // rid_a/rid_b ride the output (r14): they are the group minima
-    // the EDGES consumers need, so carrying them removes those
+    // same-signature collisions are handled arithmetically by the
+    // callers. rid_a/rid_b ride the output (r14): they are the group
+    // minima the EDGES consumers need, so carrying them removes those
     // consumers' two sh→rep mapping joins outright.
-    val repPairs = a.hint("shuffle_hash")
-      .join(b.hint("shuffle_hash"), Seq("band_idx", "band_val"))
-      .filter(col("rid_a") < col("rid_b"))
+    val banded = groups.select(col("sh"), col("rep_id"),
+      Lsh.substrBands(col("sh"), 4, 4))
+    val repPairs = Lsh.bandSelfJoin(banded, "band_val",
+        Seq("sh" -> "sh"), "rep_id" -> "rid")
       .select(col("sh_a"), col("sh_b"), col("rid_a"), col("rid_b"),
         simhashHamming(col("sh_a"), col("sh_b")).as("hamming"))
       // threshold BEFORE the dedup shuffle: a signature pair colliding
@@ -743,12 +653,7 @@ object Dedup {
     // the pair orientation, so least/greatest is just rid_a/rid_b
     val repEdges = repPairs
       .select(col("rid_a").as("id_a"), col("rid_b").as("id_b"))
-    val starEdges = members
-      .join(groups.filter(col("__m") > 1)
-        .select(col("sh"), col("rep_id")), Seq("sh"))
-      .filter(col(idCol) =!= col("rep_id"))
-      .select(col("rep_id").as("id_a"), col(idCol).as("id_b"))
-    repEdges.union(starEdges)
+    repEdges.union(Lsh.starEdges(members, groups, "sh", idCol))
   }
 
   /** BATCH-PROPORTIONAL SimHash edge discovery for the incremental
@@ -793,20 +698,13 @@ object Dedup {
       .agg(min(col(idCol)).as("rep_b"))
     val hGroups = served.select(col(idCol), col("sh"))
       .groupBy(col("sh")).agg(min(col(idCol)).as("rep_h"))
-    def bandsOf(g: DataFrame, tag: String, rep: String): DataFrame = g
-      .select(col("sh"), col(rep),
-        posexplode(array((0 until 4).map(b =>
-          col("sh").substr(b * 4 + 1, 4)): _*))
-          .as(Seq("band_idx", "band_val")))
-      .select(col("sh").as(s"sh_$tag"), col(rep),
-        col("band_idx"), col("band_val"))
-    // both sides descend from collapse AGGREGATES — the r12 broadcast
-    // hazard — so the band join is pinned shuffle-shaped; the carry
+    def bandsOf(g: DataFrame, tag: String, rep: String): DataFrame =
+      g.select(col("sh").as(s"sh_$tag"), col(rep),
+        Lsh.substrBands(col("sh"), 4, 4))
+    // both sides descend from collapse AGGREGATES ([[Lsh]]); the carry
     // is (16-char sh, one long rep) per row, fingerprint-weight
-    val crossEdges = bandsOf(bGroups, "b", "rep_b")
-      .hint("shuffle_hash")
-      .join(bandsOf(hGroups, "h", "rep_h").hint("shuffle_hash"),
-        Seq("band_idx", "band_val"))
+    val crossEdges = Lsh.bandProbe(bandsOf(bGroups, "b", "rep_b"),
+        bandsOf(hGroups, "h", "rep_h"), "band_val")
       // threshold BEFORE the dedup exchange (the simhashRepPairs
       // discipline): far-apart band collisions never shuffle twice
       .filter(simhashHamming(col("sh_b"), col("sh_h")) <= maxHamming)

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.dedup.Lsh
 
 /** Vector similarity search over an embedding column (Array[Float])
   * (capability extension — BASELINE.json north star).
@@ -1071,7 +1072,8 @@ object Similarity {
       .agg(min(col(idCol)).as("rep"))
       .select(col("rep"), col(vecCol), col("sig"))
     // band exchanges carry (rep, band) — vectors join back below at
-    // candidate cardinality
+    // candidate cardinality. `substring`, not Lsh.substrBands' `substr`:
+    // the same expression, but the two print differently in plans
     def bandsOf(g: DataFrame, repAs: String): DataFrame = g
       .select(col("rep").as(repAs),
         posexplode(array((0 until bands).map(b =>
@@ -1090,22 +1092,13 @@ object Similarity {
       .filter(col("__cs") >= threshold)
       .select(least(col("rep_a"), col("rep_b")).as("id_a"),
         greatest(col("rep_a"), col("rep_b")).as("id_b"))
-    // both banded sides descend from aggregates — pin shuffle-shaped
-    val crossCands = bandsOf(bGroups, "rep_a").hint("shuffle_hash")
-      .join(bandsOf(hGroups, "rep_b").hint("shuffle_hash"),
-        Seq("band_idx", "band_val"))
+    // both banded sides descend from aggregates ([[graft.dedup.Lsh]])
+    val crossCands = Lsh.bandProbe(bandsOf(bGroups, "rep_a"),
+        bandsOf(hGroups, "rep_b"), "band_val")
       .select(col("rep_a"), col("rep_b")).distinct()
     val crossEdges = rescored(crossCands, bGroups, hGroups)
-    // ONE explicit band exchange shared by BOTH self-join sides (r14,
-    // guide §2.4 — see simhashRepPairsFromSigs)
-    val bBands = bandsOf(bGroups, "rep")
-      .repartition(col("band_idx"), col("band_val"))
-    val withinCands = bBands.select(col("rep").as("rep_a"),
-        col("band_idx"), col("band_val")).hint("shuffle_hash")
-      .join(bBands.select(col("rep").as("rep_b"),
-        col("band_idx"), col("band_val")).hint("shuffle_hash"),
-        Seq("band_idx", "band_val"))
-      .filter(col("rep_a") < col("rep_b"))
+    val withinCands = Lsh.bandSelfJoin(bandsOf(bGroups, "rep"),
+        "band_val", Nil, "rep" -> "rep")
       .select(col("rep_a"), col("rep_b")).distinct()
     val withinEdges = rescored(withinCands, bGroups, bGroups)
     // rep→member stars: the self-cosine re-check makes zero-norm

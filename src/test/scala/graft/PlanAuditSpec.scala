@@ -217,6 +217,119 @@ class PlanAuditSpec extends SparkSpec {
       conf.set("spark.sql.adaptive.enabled", _))
   }
 
+  test("band joins are shuffle-hash; each self-join shuffles its bands once") {
+    // The graft.dedup.Lsh discipline, pinned on every query whose
+    // detector goes through it: a join keyed on band_idx is a
+    // ShuffledHashJoin (the banded sides descend from collapse
+    // aggregates, so an unpinned join broadcasts a corpus-proportional
+    // side), and a band SELF-join (the <rep>_a < <rep>_b orientation in
+    // its condition) reads ONE hashpartitioning(band_idx, …) exchange
+    // on one side and its ReusedExchange on the other. Band joins
+    // inside cluster closures and merges run as actions while the
+    // query is built, so a QueryExecutionListener captures those plans
+    // (cached relations included) next to the final one. AQE off, as
+    // in the q100 test: static ReuseExchange shows the reuse in the
+    // plan.
+    //
+    // Served signature tables are materialized with AQE ON first, as
+    // every engine session builds them: a table checkpointed with AQE
+    // off reports hashpartitioning(sig_fp) with its scan's raw
+    // expression id, so the two sides of a self-join over it never
+    // canonicalize equal and its band exchange runs once per side.
+    // Pinned per query: (band self-joins, band joins outside Lsh). The
+    // one outside is Similarity.nearDuplicates' in q184's label build
+    // (unhinted, vectors carried into the join).
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, LessThan}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val pinned = Seq(
+      "q25_lsh_pairs" -> (1, 0), "q47_simhash_pairs" -> (1, 0),
+      "q126_incremental_neardup" -> (0, 0),
+      "q174_ensemble_dedup" -> (2, 0), "q180_incremental_cycle" -> (2, 0),
+      "q181_minhash_cycle" -> (2, 0), "q184_semantic_cycle" -> (1, 1))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+      case r: ReusedExchangeExec => Seq(r)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    // the exchange that feeds one join side
+    def feed(p: SparkPlan): Option[SparkPlan] = p match {
+      case e: ShuffleExchangeExec => Some(e)
+      case r: ReusedExchangeExec => Some(r)
+      case _ => p.children.headOption.flatMap(feed)
+    }
+    def oriented(j: BaseJoinExec): Boolean = j.condition.exists(_.exists {
+      case LessThan(a: Attribute, b: Attribute) =>
+        a.name.endsWith("_a") && b.name == a.name.dropRight(2) + "_b"
+      case _ => false
+    })
+    def bandExchange(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.toString.startsWith("hashpartitioning(band_idx")
+      case r: ReusedExchangeExec => bandExchange(r.child)
+      case _ => false
+    }
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          d: Long): Unit = captured.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.adaptive.enabled")
+    try {
+      graft.dedup.Dedup.clearSigCache()
+      conf.set("spark.sql.adaptive.enabled", "true")
+      pinned.foreach { case (name, _) => SparkEntry.queries(name)(spark, dir) }
+      conf.set("spark.sql.adaptive.enabled", "false")
+      pinned.foreach { case (name, (nSelf, nOutside)) =>
+        captured.clear()
+        spark.listenerManager.register(listener)
+        val finalPlan = try {
+          val p = SparkEntry.queries(name)(spark, dir)
+            .queryExecution.executedPlan
+          // the listener bus is async; wait for it to drain
+          var last = -1
+          val deadline = System.nanoTime() + 10e9.toLong
+          while (System.nanoTime() < deadline && captured.size != last) {
+            last = captured.size; Thread.sleep(500)
+          }
+          p
+        } finally spark.listenerManager.unregister(listener)
+        // a cached relation read by several actions is one plan
+        val seen = java.util.Collections.newSetFromMap(
+          new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+        val (outside, bandJoins) = (finalPlan +: captured.toArray(
+            Array.empty[SparkPlan]).toSeq).flatMap(nodes).collect {
+          case j: BaseJoinExec if seen.add(j) &&
+            j.leftKeys.exists(_.references.exists(_.name == "band_idx")) => j
+        }.partition(_.output.exists(_.name == "__va"))
+        assert(outside.size == nOutside,
+          s"$name: expected $nOutside band joins outside Lsh, " +
+            s"found ${outside.size}")
+        assert(bandJoins.nonEmpty, s"$name: no band join found")
+        val notShj = bandJoins.filterNot(_.isInstanceOf[ShuffledHashJoinExec])
+        assert(notShj.isEmpty, s"$name: band joins not shuffle-hash:\n" +
+          notShj.map(_.toString.take(1500)).mkString("\n"))
+        val self = bandJoins.filter(oriented)
+        assert(self.size == nSelf,
+          s"$name: expected $nSelf band self-joins, found ${self.size}")
+        self.foreach { j =>
+          val f = j.children.flatMap(feed)
+          assert(f.size == 2 && f.forall(bandExchange) &&
+              f.count(_.isInstanceOf[ReusedExchangeExec]) == 1,
+            s"$name: a band self-join must read ONE shared band " +
+              s"exchange, got:\n${f.mkString("\n")}")
+        }
+      }
+    } finally saved.fold(conf.unset("spark.sql.adaptive.enabled"))(
+      conf.set("spark.sql.adaptive.enabled", _))
+  }
+
   test("source quality rank computes the stats pass exactly once") {
     // q108 is q100's bucketed two-level design applied per source:
     // the bucket-total branch and the probe branch must share the
